@@ -102,6 +102,15 @@ def fit_build_seconds() -> dict[str, float]:
     return dict(_FIT_BUILDS)
 
 
+def reset_fit_builds() -> None:
+    """Forget the cold-build log, so a run that starts here reports
+    only its own builds. Deliberately separate from
+    :func:`release_shared`: callers that read :func:`fit_build_seconds`
+    as a delta across a region that releases the shared caches would
+    otherwise lose a build made inside that region."""
+    _FIT_BUILDS.clear()
+
+
 def shared_fit(key: Hashable, builder: Callable[[], object]) -> object:
     """The :func:`shared_scan` discipline for DRIVER-SIDE fitted
     artifacts — the BPE merge table, the unigram/WordPiece vocab
@@ -119,9 +128,46 @@ def shared_fit(key: Hashable, builder: Callable[[], object]) -> object:
     return _SHARED_FIT[key]
 
 
+# Resolved relations: key -> (token, DataFrame); see shared_relation.
+_RELATIONS: dict[Hashable, tuple[str, DataFrame]] = {}
+
+
+def shared_relation(
+    spark, key: Hashable, token: str | None, builder: Callable[[], DataFrame]
+) -> DataFrame:
+    """Reuse a resolved (listed, schema-inferred) DataFrame while the
+    data it reads is unchanged — the memo under the snapshot-store
+    read path (operators/snapshot_store.read_snapshot).
+
+    ``token`` names the exact immutable state ``builder`` reads (a
+    manifest commit id). A frame is served again only for the same
+    ``key``, the same token and the SAME live session object — never
+    to a ``spark.newSession()`` sibling, a micro-batch's cloned
+    session, or a session recreated after a stop. Any miss replaces
+    the key's frame, so the memo holds at most one relation per key.
+    ``token=None`` (state that cannot be named) builds uncached and
+    drops the key. Nothing is persisted; :func:`release_shared` clears
+    the memo."""
+    hit = _RELATIONS.get(key)
+    if (
+        token is not None
+        and hit is not None
+        and hit[0] == token
+        and hit[1].sparkSession is spark
+        and _session_alive(hit[1])
+    ):
+        return hit[1]
+    df = builder()
+    if token is None:
+        _RELATIONS.pop(key, None)
+    else:
+        _RELATIONS[key] = (token, df)
+    return df
+
+
 def release_shared() -> int:
     """Unpersist every shared substrate scan (and drop the fitted-
-    artifact memo)."""
+    artifact and resolved-relation memos)."""
     n = 0
     for df in _SHARED.values():
         try:
@@ -131,6 +177,7 @@ def release_shared() -> int:
             pass
     _SHARED.clear()
     _SHARED_FIT.clear()
+    _RELATIONS.clear()
     return n
 
 

@@ -35,24 +35,10 @@ Scale shape (the part that must survive 100 TB):
 """
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from intelligencepipeline_spark.operators.litexpr import (
-    int_array_lit,
-    int_matrix_lit,
-)
+from intelligencepipeline_spark.operators.litexpr import int_matrix_lit
 from intelligencepipeline_spark.operators.similarity import quantize
-
-
-def _sq_dist(qvec: Column, centroid: list[int]) -> Column:
-    """Exact integer squared-L2 between a quantized vector column and a
-    literal centroid (fold stays in codegen; no UDF)."""
-    lit_c = int_array_lit(centroid)
-    return F.aggregate(
-        F.zip_with(qvec, lit_c, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
 
 
 def assign_clusters(

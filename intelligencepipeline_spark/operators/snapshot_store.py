@@ -24,6 +24,17 @@ snapshot — the exact contract a Delta ``MERGE`` transaction log
 provides, at file-manifest granularity (the container has no delta
 jar; ``operators/merge.py`` upgrades to real Delta when importable).
 
+Every published manifest carries a fresh ``commit_id``. Gen dirs are
+immutable once published, so a commit id names one exact snapshot:
+``read_snapshot`` reuses the relation it resolved (file listing,
+``mergeSchema`` footer merge) for as long as the manifest it reads
+carries the same id, and a lookup on an unchanged snapshot runs only
+its scan job. The reuse is keyed on (``realpath(table)``, ``version``
+argument) and holds one relation per key; a frame is served only to
+the session object that resolved it, and
+``caching.release_shared()`` clears it. A manifest written before
+commit ids existed is read uncached, as before.
+
 Scale: manifests are O(buckets) JSON (64k buckets ≈ a 1-2 MB file);
 per-commit cost is O(touched buckets + retained versions), never a
 full-table scan. Reading an old version costs the same as the head —
@@ -36,9 +47,12 @@ import json
 import os
 import re
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from intelligencepipeline_spark.caching import shared_relation
 
 _POINTER = "_MANIFEST.json"
 
@@ -55,8 +69,10 @@ def read_manifest(table_path: str, version: int | None = None) -> dict | None:
 def publish_manifest(table_path: str, manifest: dict) -> None:
     """Immutable version manifest first, then the atomic pointer swap —
     a pointer reader can never observe a version whose v-file is
-    missing."""
-    body = json.dumps(manifest)
+    missing. Both files carry the same body, stamped with a fresh
+    ``commit_id``: the name under which readers reuse a resolved
+    relation (see ``read_snapshot``)."""
+    body = json.dumps({**manifest, "commit_id": uuid.uuid4().hex})
     for name in (f"_MANIFEST-v{manifest['gen']}.json", _POINTER):
         tmp = os.path.join(table_path, name + ".tmp")
         with open(tmp, "w") as fh:
@@ -85,24 +101,36 @@ def read_snapshot(
     in-flight generation directories). Keeps ``bucket`` as a column,
     drops the bookkeeping ``gen``. ``mergeSchema`` is on: buckets
     rewritten after an additive schema change coexist with untouched
-    old-schema buckets."""
+    old-schema buckets.
+
+    The manifest is read on every call; the resolved frame is reused
+    while it carries the same ``commit_id`` (module docstring)."""
     manifest = read_manifest(table_path, version=version)
     if manifest is None or not manifest["buckets"]:
         raise FileNotFoundError(
             f"no snapshot manifest at {table_path}"
             + (f" for version {version}" if version is not None else "")
         )
-    paths = [
-        os.path.join(table_path, f"bucket={b}", f"gen={g}")
-        for b, g in sorted(
-            manifest["buckets"].items(), key=lambda kv: int(kv[0])
+
+    def resolve() -> DataFrame:
+        paths = [
+            os.path.join(table_path, f"bucket={b}", f"gen={g}")
+            for b, g in sorted(
+                manifest["buckets"].items(), key=lambda kv: int(kv[0])
+            )
+        ]
+        return (
+            spark.read.option("basePath", table_path)
+            .option("mergeSchema", "true")
+            .parquet(*paths)
+            .drop("gen")
         )
-    ]
-    return (
-        spark.read.option("basePath", table_path)
-        .option("mergeSchema", "true")
-        .parquet(*paths)
-        .drop("gen")
+
+    return shared_relation(
+        spark,
+        ("snapshot", os.path.realpath(table_path), version),
+        manifest.get("commit_id"),
+        resolve,
     )
 
 

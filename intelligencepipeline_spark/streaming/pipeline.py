@@ -118,7 +118,15 @@ def read_bucketed_snapshot(
     also see superseded or in-flight generation directories). Pass
     ``version=<gen>`` (see ``snapshot_versions``) to TIME-TRAVEL to any
     retained commit — every version manifest pins the full bucket→gen
-    map it published."""
+    map it published.
+
+    Repeated reads of an unchanged snapshot reuse one resolved
+    relation: it is keyed on the manifest's commit id and the table
+    path and served only to the session that resolved it, so a point
+    lookup after the first runs just its scan job. A new commit is a
+    new id, so a read never sees stale state.
+    ``caching.release_shared()`` clears the memo; a manifest written
+    without a commit id is read uncached."""
     return _read_snapshot(spark, table_path, version=version)
 
 

@@ -189,3 +189,16 @@ def test_g9_substrates_equal_direct_derivation(spark):
         # session fixture even when an assertion above fails
         release_persisted()
         release_shared()
+
+
+def test_reset_fit_builds_clears_only_the_build_log():
+    """reset_fit_builds starts a fresh build log; release_shared keeps
+    it, so a delta read across a release still sees builds made in
+    between."""
+    from intelligencepipeline_spark import caching
+
+    caching.record_fit_build("/tmp/ip_test_reset_cache", 1.5)
+    caching.release_shared()
+    assert caching.fit_build_seconds()["/tmp/ip_test_reset_cache"] == 1.5
+    caching.reset_fit_builds()
+    assert caching.fit_build_seconds() == {}

@@ -157,3 +157,28 @@ def test_cdc_chunk_rows_matches_expression(spark):
         vec = cdc_chunk_rows(df)
         assert expr.exceptAll(vec).count() == 0
         assert vec.exceptAll(expr).count() == 0
+
+
+def test_cdc_chunk_rows_keeps_string_key_type(spark):
+    """The key column keeps its own type (here a string id) instead of
+    being declared ``long``, and rows still equal the expression form."""
+    from intelligencepipeline_spark.functions.text import (
+        cdc_chunk_rows,
+        cdc_chunks,
+    )
+
+    df = spark.createDataFrame(
+        [
+            ("doc-a", "alpha beta gamma delta epsilon zeta eta theta"),
+            ("doc-b", None),
+            ("doc-c", " ".join(f"w{i}" for i in range(60))),
+        ],
+        "uid string, text string",
+    )
+    expr = df.select(
+        "uid", F.explode(cdc_chunks(F.col("text"))).alias("chunk")
+    )
+    vec = cdc_chunk_rows(df, key="uid")
+    assert vec.schema["uid"].dataType.simpleString() == "string"
+    assert expr.exceptAll(vec).count() == 0
+    assert vec.exceptAll(expr).count() == 0

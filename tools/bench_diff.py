@@ -33,8 +33,8 @@ def _load(path: str) -> dict:
     if "queries" in d:
         return d
     tail = d.get("tail", "")
-    pairs = re.findall(r'"([a-z0-9_]+)": ([0-9][0-9.]*)', tail)
-    total = re.search(r'"value": ([0-9.]+)', tail)
+    pairs = re.findall(r'"([a-z0-9_]+)": ?([0-9][0-9.]*)', tail)
+    total = re.search(r'"value": ?([0-9.]+)', tail)
     return {
         "value": float(total.group(1)) if total else None,
         "queries": {
